@@ -4,6 +4,17 @@ Local mode is a single JVM; the same configs are what we would ship on a
 real 1000-executor cluster: AQE on (runtime coalesce + skew-join), UTC
 session timezone (oracle comparability), Arrow enabled for the pandas-UDF
 slow path.
+
+Python workers fork from the package's own daemon
+(``spark.python.daemon.module``, see ``daemon.py``): PySpark's daemon,
+except that a worker's per-task ``importlib.invalidate_caches()`` no
+longer re-reads Spark's own archives on ``sys.path`` (``pyspark.zip``,
+the ``spark-core`` jar), ~0.18 CPU-s per task. ``spark.python.worker.module``
+cannot carry that fix, because ``pyspark.daemon`` only honours worker
+modules named ``pyspark*``. Spark starts the daemon with ``python -m``,
+so the package root is merged into the workers' ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``); without it no Python job could start
+when the application starts outside the repo.
 """
 
 from __future__ import annotations
@@ -13,6 +24,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -58,8 +72,13 @@ def get_spark(
         # disables file/row-group pruning on every timestamp column —
         # the whole point of sorted/z-ordered layouts (operators/layout)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.python.daemon.module", "dwp_hbase_to_mongo_export_spark.daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, extra_conf.get(_WORKER_PYTHONPATH)) if p
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -367,3 +367,33 @@ def test_pq_legacy_marker_without_ids_record_raises(spark, emb, tmp_path):
         f.write(json.dumps({"kind": "pq", "id_col": "vec_id"}))
     with pytest.raises(ValueError, match="ambiguous"):
         similarity.recover_pq_index_append(spark, path)
+
+
+# ---------------------------------------------------------------- purge
+
+
+@pytest.mark.parametrize("branch", ["not_in", "anti_join"])
+def test_null_purge_key_purges_only_matching_rows(
+    spark, tmp_path, monkeypatch, branch
+):
+    """A NULL in the purge list matches no store row, on both purge
+    branches: the inlined NOT-IN predicate (NULL inside NOT IN would
+    make it NULL for every row and drop the whole relation) and the
+    broadcast anti-join taken above ``_ISIN_PURGE_MAX`` keys. NULL store
+    keys survive either way."""
+    if branch == "anti_join":
+        monkeypatch.setattr(textindex, "_ISIN_PURGE_MAX", 2)
+    sdir = str(tmp_path / "store")
+    rows = [(i, f"v{i}", i % 2) for i in range(6)] + [(None, "vnull", 0)]
+    spark.createDataFrame(rows, "id int, val string, bucket int").write.partitionBy(
+        "bucket"
+    ).parquet(sdir)
+    purge = spark.createDataFrame([(1,), (4,), (None,)], "id int")
+
+    leaves = textindex._batched_leaf_purge(
+        spark, sdir, "bucket=", purge, "id", columns=["id", "val"]
+    )
+
+    assert leaves == ["bucket=0", "bucket=1"]
+    left = {(r.id, r.val) for r in spark.read.parquet(sdir).collect()}
+    assert left == {(0, "v0"), (2, "v2"), (3, "v3"), (5, "v5"), (None, "vnull")}

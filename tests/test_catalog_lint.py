@@ -86,6 +86,25 @@ def test_spark_outputs_have_no_complex_columns():
     ast.parse(src)
 
 
+def test_readme_driver_contract_counts_match_registry():
+    """README's driver-contract counts are the registry's, so they cannot
+    drift again (they once said 176 while the catalog held 188)."""
+    import re
+    from pathlib import Path
+
+    text = (Path(__file__).resolve().parent.parent / "README.md").read_text()
+    m = re.search(
+        r"`queries\(\)` \((\d+) catalog\s+entries\), and `oracle_sql\(\)` "
+        r"\((\d+) DuckDB-runnable",
+        text,
+    )
+    assert m, "README's driver-contract sentence changed shape"
+    assert (int(m[1]), int(m[2])) == (len(catalog.QUERIES), len(catalog.ORACLE))
+    words = "zero one two three four five six seven eight nine ten".split()
+    m = re.search(r"(\w+) surfaces live in a separate\s+BENCH_ONLY registry", text)
+    assert m and words.index(m[1].lower()) == len(catalog.BENCH_ONLY)
+
+
 def test_driver_window_is_valid():
     assert len(catalog.DRIVER_WINDOW) == len(set(catalog.DRIVER_WINDOW))
     unknown = [n for n in catalog.DRIVER_WINDOW if n not in catalog.QUERIES]
