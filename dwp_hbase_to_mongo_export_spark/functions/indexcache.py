@@ -13,7 +13,7 @@ world-readable temp path (round-9 advice):
   over the same fixture (tools/spill_drill.py runs this query in a
   constrained AND an unconstrained session; tools/scale_sweep.py too)
   can both see a missing/stale fingerprint and race a rebuild against a
-  query, so readers hit the loud-but-flaky ``_build-pending`` refusal
+  query, so readers hit the loud-but-flaky rebuild-marker refusal
   mid-build. Fix: the fingerprint check + build runs under an exclusive
   ``flock`` on a sidecar lockfile — the second session blocks until the
   first's build commits, re-checks the fingerprint, sees it stamped,
@@ -50,8 +50,8 @@ def build_lock(path: str):
     critical section for the index at ``path``. POSIX ``flock`` on a
     sidecar file, so it works across processes (the concurrent-session
     scenario) and is released by the OS even if the holder dies — a
-    crashed build leaves the store's own ``_build-pending`` marker, not
-    a wedged lock."""
+    crashed build leaves the store's own rebuild marker
+    (operators/storeproto.py), not a wedged lock."""
     import fcntl
 
     os.makedirs(os.path.dirname(path), exist_ok=True)

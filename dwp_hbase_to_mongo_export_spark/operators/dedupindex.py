@@ -44,50 +44,16 @@ signature/band drift) from bounded samples, mirroring
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import minhash_sets_and_sigs
-from .textindex import (
-    _batched_leaf_purge,
-    _BUILD_PENDING,
-    _LAST_APPEND,
-    _PENDING,
-    _UNKNOWN,
-    _append_lock,
-    _clear_stale_ids_record,
-    _recover_swap,
-    _restore_last_append,
-    _swap_write,
-    _write_last_append,
-    read_last_append,
-)
+from . import storeproto
+from .storeproto import read_last_append, stored_fingerprint  # noqa: F401
 
 N_SET_BUCKETS = 64
-_PENDING_IDS = "_pending-ids"
-
-
-def _check_markers(path: str) -> None:
-    """Reader-side refusal for a marked artifact, advising the action
-    that is actually SAFE per marker (a crashed append may already have
-    landed band/set rows, so 'retry the append' without recovery would
-    double-write them — round-8 advice, shared with textindex)."""
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — bands/sets/meta may "
-            "mix two generations; rebuild the index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — the "
-            "band and set relations may disagree (delta rows may "
-            "already be stored); run recover_dedup_index_append and "
-            "re-append the delta, or rebuild the index"
-        )
 
 
 def _bucket_of(id_col: str):
@@ -150,6 +116,23 @@ def _sig_relations(
     return bands, sets
 
 
+def _meta_frame(
+    spark: SparkSession,
+    n_docs: int,
+    n_perm: int,
+    rows_per_band: int,
+    k: int,
+    max_chars: int,
+    id_col: str,
+    fingerprint: str,
+) -> DataFrame:
+    return spark.createDataFrame(
+        [(n_docs, n_perm, rows_per_band, k, max_chars, id_col, fingerprint)],
+        "n_docs bigint, n_perm int, rows_per_band int, k int, "
+        "max_chars int, id_col string, fingerprint string",
+    )
+
+
 def build_dedup_index(
     corpus: DataFrame,
     path: str,
@@ -165,76 +148,127 @@ def build_dedup_index(
     The only shuffles are the by-band repartition of the band rows and
     the parquet write of the bucketed sets — no joins, no aggregation:
     signature state is per-document. meta (params + id_col +
-    fingerprint + n_docs) is written LAST as the commit record; a
-    crashed FIRST build leaves no meta and consumers treat the artifact
-    as absent. An in-place REBUILD over an existing artifact cannot
-    rely on that (old meta stays readable while bands→sets→meta
-    overwrites land), so it is bracketed by a ``_build-pending`` marker
-    every reader refuses (round-8 advice, shared with textindex)."""
-    os.makedirs(path, exist_ok=True)
-    # rebuilds are mutations like appends: hold the store's exclusive
-    # lock so a rebuild never interleaves with a live append's writes
-    with _append_lock(path):
-        return _build_dedup_index_locked(
-            corpus, path, text_col, id_col, n_perm, rows_per_band, k,
-            max_chars, fingerprint,
+    fingerprint + n_docs) is written LAST, inside the store protocol's
+    build bracket."""
+
+    def write() -> None:
+        bands, sets = _sig_relations(
+            corpus, text_col, id_col, n_perm, rows_per_band, k, max_chars
         )
+        bands.write.mode("overwrite").partitionBy("band").parquet(
+            os.path.join(path, "bands")
+        )
+        sets.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "sets")
+        )
+        spark = corpus.sparkSession
+        n_docs = spark.read.parquet(os.path.join(path, "sets")).count()
+        _meta_frame(
+            spark, n_docs, n_perm, rows_per_band, k, max_chars, id_col,
+            fingerprint or "",
+        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+
+    storeproto.build(SPEC, path, fingerprint, write)
 
 
-def _build_dedup_index_locked(
-    corpus: DataFrame,
+def _stored_id_col(spark: SparkSession, path: str, _recorded: dict) -> str:
+    """The id column the index was built with (pre-round-9 metas lack
+    it: they were built on doc_id)."""
+    return storeproto.read_meta(spark, path).asDict().get("id_col") or "doc_id"
+
+
+def _prepare_append(
+    spark: SparkSession,
     path: str,
-    text_col: str,
-    id_col: str,
-    n_perm: int,
-    rows_per_band: int,
-    k: int,
-    max_chars: int,
-    fingerprint: str | None,
-) -> None:
-    rebuild_over_existing = os.path.isdir(
-        os.path.join(path, "meta")
-    ) or os.path.isdir(os.path.join(path, "bands"))
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild_over_existing:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pids = os.path.join(path, _PENDING_IDS)
-    if os.path.isdir(pids):
-        shutil.rmtree(pids)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        # batch ids committed against the OLD artifact must not no-op
-        # appends to the rebuilt one
-        os.remove(last)
+    delta: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fingerprint: str | None = None,
+) -> storeproto.Batch:
+    """The append hook: delta-sized signature work, band/set rows
+    appended into the same partition layout, n_docs refreshed by
+    addition. Signature parameters come from the stored meta, so an
+    append can never mix permutation constants with the build's; for
+    disjoint id sets the merged artifact is row-identical to a full
+    rebuild over old ∪ delta (pinned in tests/test_extensions.py)."""
+    m = storeproto.read_meta(spark, path)
+    stored_id_col = m.asDict().get("id_col")
+    if stored_id_col and stored_id_col != id_col:
+        raise ValueError(
+            f"{path}: index was built with id_col={stored_id_col!r}; "
+            f"append called with id_col={id_col!r} — mixed id columns "
+            "would corrupt the band/set relations"
+        )
     bands, sets = _sig_relations(
-        corpus, text_col, id_col, n_perm, rows_per_band, k, max_chars
+        delta, text_col, id_col, m["n_perm"], m["rows_per_band"], m["k"],
+        m["max_chars"],
     )
-    bands.write.mode("overwrite").partitionBy("band").parquet(
-        os.path.join(path, "bands")
+
+    def write_rows(_ids: DataFrame) -> dict:
+        bands.write.mode("append").partitionBy("band").parquet(
+            os.path.join(path, "bands")
+        )
+        sets.write.mode("append").partitionBy("bucket").parquet(
+            os.path.join(path, "sets")
+        )
+        return {}
+
+    def merge_meta(_extras: dict) -> list:
+        n_new = delta.select(F.count(F.lit(1))).head()[0]
+        meta = _meta_frame(
+            spark,
+            int(m["n_docs"]) + int(n_new),
+            int(m["n_perm"]),
+            int(m["rows_per_band"]),
+            int(m["k"]),
+            int(m["max_chars"]),
+            stored_id_col or id_col,
+            fingerprint or "",
+        )
+        return [("meta", meta, None)]
+
+    return storeproto.Batch(
+        recorded=m.asDict(),
+        ids=delta.select(F.col(id_col).alias("id")).distinct(),
+        write_rows=write_rows,
+        merge_meta=merge_meta,
     )
-    sets.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "sets")
-    )
-    spark = corpus.sparkSession
-    n_docs = spark.read.parquet(os.path.join(path, "sets")).count()
-    meta = spark.createDataFrame(
-        [(n_docs, n_perm, rows_per_band, k, max_chars, id_col, fingerprint or "")],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-    meta.write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
 
 
-def _read_meta(spark: SparkSession, path: str):
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    return spark.read.parquet(meta_dir).head()
+def _restore_meta(spark: SparkSession, path: str, old: dict) -> DataFrame:
+    """The recorded (n_docs, fingerprint) with the invariant signature
+    params re-read from the live meta."""
+    m = storeproto.read_meta(spark, path)
+    return _meta_frame(
+        spark,
+        old["n_docs"],
+        int(m["n_perm"]),
+        int(m["rows_per_band"]),
+        int(m["k"]),
+        int(m["max_chars"]),
+        m.asDict().get("id_col") or "doc_id",
+        old["fingerprint"],
+    )
+
+
+# Every doc writes one row per band, so a purge touches every band leaf
+# (re-sorted by id to keep the governance min-max skipping); the set
+# purge is pruned to the buckets the recorded ids land in.
+SPEC = storeproto.StoreSpec(
+    name="dedup",
+    relations=(
+        storeproto.Relation("bands", "band=", key=_stored_id_col, sorted_by_key=True),
+        storeproto.Relation(
+            "sets",
+            "bucket=",
+            key=_stored_id_col,
+            prune=lambda ids: ids.select(_bucket_of("id")),
+        ),
+    ),
+    recorded={"n_docs": int, "fingerprint": storeproto._fp},
+    prepare=_prepare_append,
+    restore_meta=_restore_meta,
+)
 
 
 def append_to_dedup_index(
@@ -245,317 +279,24 @@ def append_to_dedup_index(
     fingerprint: str | None = None,
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell — mutators hold the store's exclusive
-    ``_append.lock`` (textindex._append_lock) so concurrent appends
-    queue instead of purging each other's in-flight rows; the protocol
-    itself is documented on ``_append_to_dedup_index_impl``."""
-    with _append_lock(path):
-        return _append_to_dedup_index_impl(
-            delta, path, text_col, id_col, fingerprint, batch_id
-        )
-
-
-def _append_to_dedup_index_impl(
-    delta: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint: str | None = None,
-    batch_id: str | None = None,
-) -> dict:
-    """Incrementally index NEW documents: delta-sized signature work,
-    band/set rows appended into the same partition layout, n_docs
-    refreshed by addition (never a corpus re-scan). Signature
-    parameters come from the stored meta, so an append can never mix
-    permutation constants with the build's. For disjoint id sets the
-    merged artifact is row-identical to a full rebuild over old ∪ delta
-    (pinned in tests/test_extensions.py). Crash-safety: the
-    ``_append-pending`` marker brackets the append and query/governance
-    refuse a marked index; the meta rewrite goes through the staged
-    swap.
-
-    RETRY protocol (round-8 advice — a crashed append may already have
-    landed band/set rows, so blind re-append would double-write them):
-    the marker records the pre-append (n_docs, fingerprint) and
-    ``_pending-ids`` records the delta's ids BEFORE any store write;
-    entry-time ``recover_dedup_index_append`` (called here
-    automatically) purges those ids and restores the recorded meta,
-    returning the artifact to its exact pre-append state — after which
-    this append (including a re-run of a crashed one) is safe."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the index "
-            "before appending"
-        )
-    _recover_dedup_index_append_impl(spark, path)
-    # Idempotence gate (round-10, see textindex.read_last_append): a
-    # retry of an already-committed batch id no-ops instead of
-    # double-writing band/set rows.
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        # empty micro-batches would only fragment the store; still
-        # consume the batch id (atomic sidecar write)
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    m = _read_meta(spark, path)
-    stored_id_col = m.asDict().get("id_col")
-    if stored_id_col and stored_id_col != id_col:
-        raise ValueError(
-            f"{path}: index was built with id_col={stored_id_col!r}; "
-            f"append called with id_col={id_col!r} — mixed id columns "
-            "would corrupt the band/set relations"
-        )
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(m["n_docs"]),
-                    "fingerprint": m["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    delta.select(F.col(id_col).alias("id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, _PENDING_IDS))
-    bands, sets = _sig_relations(
-        delta,
-        text_col,
-        id_col,
-        m["n_perm"],
-        m["rows_per_band"],
-        m["k"],
-        m["max_chars"],
+    """Incrementally index NEW documents (see ``_prepare_append``) under
+    the store protocol; ``batch_id`` makes a retried batch a no-op."""
+    return storeproto.append(
+        SPEC, delta, path, batch_id,
+        text_col=text_col, id_col=id_col, fingerprint=fingerprint,
     )
-    bands.write.mode("append").partitionBy("band").parquet(
-        os.path.join(path, "bands")
-    )
-    sets.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, "sets")
-    )
-    n_new = delta.select(F.count(F.lit(1))).head()[0]
-    meta = spark.createDataFrame(
-        [
-            (
-                int(m["n_docs"]) + int(n_new),
-                int(m["n_perm"]),
-                int(m["rows_per_band"]),
-                int(m["k"]),
-                int(m["max_chars"]),
-                stored_id_col or id_col,
-                fingerprint or "",
-            )
-        ],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-    _swap_write(meta, os.path.join(path, "meta"))
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # Commit point (round-9 advice): marker removal IS the commit
-    # record, so it precedes the ids-record delete — a crash between
-    # the two leaves a marker-less stale ids dir (inert: recovery
-    # no-ops without a marker, the next append overwrites it), never a
-    # live marker whose purge record is gone.
-    os.remove(pending)
-    shutil.rmtree(os.path.join(path, _PENDING_IDS))
-    return {"committed": True, "skipped_duplicate_batch": False}
 
 
 def recover_dedup_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked entry point for standalone recovery — holds the store's
-    ``_append.lock`` so a recovery never races a live append (whose
-    marker it would mis-read as torn). Protocol documented on
-    ``_recover_dedup_index_append_impl``."""
-    with _append_lock(path):
-        return _recover_dedup_index_append_impl(spark, path)
-
-
-def _recover_dedup_index_append_impl(spark: SparkSession, path: str) -> dict:
-    """Return a torn-append artifact to its EXACT pre-append state so
-    the same delta can be re-appended safely (round-8 advice: band/set
-    rows may already be stored when the marker is found, so a blind
-    retry double-writes them — after which collisions report duplicate
-    pairs and verification picks an arbitrary hs set).
-
-    Everything needed is recorded BEFORE the first store write, so
-    recovery never needs the delta itself: the ``_pending-ids`` ids are
-    anti-joined out of every band leaf (every doc writes one row per
-    band, so all leaves are touched) and out of the ids' set buckets
-    (computed from the ids — the other buckets cannot hold them); meta
-    is restored from the marker's recorded (n_docs, fingerprint) with
-    the invariant signature params re-read from the live meta. Purged
-    band leaves are re-sorted by id so the governance min-max skipping
-    property survives recovery. Cost: leaf-sized I/O with zero
-    signature recomputation, paid only on the rare recovery path.
-    No-op without a marker; raises on a pre-protocol (unparseable)
-    marker — that state predates the recorded scalars and only a
-    rebuild is safe. Round-9 advice hardening: a protocol-2 marker
-    without a committed ``_pending-ids`` record proves no store write
-    happened (cleanup + ``store_untouched``); the same state under a
-    pre-v2 marker is ambiguous and raises, advising rebuild."""
-    pending = os.path.join(path, _PENDING)
-    _recover_swap(os.path.join(path, "meta"))
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old_n_docs = int(state["n_docs"])
-        old_fp = str(state.get("fingerprint") or "")
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "pre-protocol or corrupt state cannot be auto-recovered; "
-            "rebuild the index from the corpus"
-        ) from None
-    m = _read_meta(spark, path)
-    id_col = m.asDict().get("id_col") or "doc_id"
-    bands_purged = sets_purged = 0
-    pids_dir = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids_dir, "_SUCCESS")):
-        # Round-9 advice: under protocol 2 the ids record precedes every
-        # store write and the marker's removal is the commit record, so
-        # marker-present-without-a-committed-ids-record PROVES no band/
-        # set/meta write happened — clean up, leave the store alone. A
-        # pre-v2 marker in this state is ambiguous ('nothing written' vs
-        # 'fully committed' under the old delete-ids-first ordering);
-        # restoring meta could silently revert n_docs/fingerprint under
-        # committed rows, so refuse loudly.
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — for a "
-                "pre-protocol-2 marker this is ambiguous between "
-                "'nothing written' and 'fully committed' and cannot be "
-                "auto-recovered; rebuild the index from the corpus"
-            )
-        if os.path.isdir(pids_dir):
-            shutil.rmtree(pids_dir)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {
-            "recovered": True,
-            "band_leaves_purged": 0,
-            "set_leaves_purged": 0,
-            "store_untouched": True,
-        }
-    ids = (
-        spark.read.parquet(pids_dir)
-        .select(F.col("id").alias(id_col))
-        .distinct()
-    )
-    bands_dir = os.path.join(path, "bands")
-    # ONE batched job per relation instead of one per leaf (the
-    # textindex._batched_leaf_purge discipline): band leaves keep their
-    # within-file id sort (min-max pruning), and the sets purge is
-    # partition-pruned to the buckets the purged ids actually land in.
-    buckets = sorted(
-        r["bucket"]
-        for r in ids.withColumn("bucket", _bucket_of(id_col))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    bands_purged = len(
-        _batched_leaf_purge(
-            spark,
-            bands_dir,
-            "band=",
-            ids,
-            id_col,
-            columns=[id_col, "band_key"],
-            sort_within=[id_col],
-        )
-    )
-    sets_purged = len(
-        _batched_leaf_purge(
-            spark,
-            os.path.join(path, "sets"),
-            "bucket=",
-            ids,
-            id_col,
-            columns=[id_col, "hs"],
-            leaf_values=buckets,
-        )
-    )
-    meta = spark.createDataFrame(
-        [
-            (
-                old_n_docs,
-                int(m["n_perm"]),
-                int(m["rows_per_band"]),
-                int(m["k"]),
-                int(m["max_chars"]),
-                id_col,
-                old_fp,
-            )
-        ],
-        "n_docs bigint, n_perm int, rows_per_band int, k int, "
-        "max_chars int, id_col string, fingerprint string",
-    )
-    _swap_write(meta, os.path.join(path, "meta"))
-    # The idempotence sidecar is pre-append state too (a crash may land
-    # after the new batch id was stamped; leaving it would wrongly
-    # no-op the legitimate re-append of the purged batch).
-    _restore_last_append(path, old_last)
-    # Same commit discipline as the append: marker removal commits the
-    # recovery; the ids record outliving the marker is inert.
-    os.remove(pending)
-    shutil.rmtree(pids_dir)
-    return {
-        "recovered": True,
-        "band_leaves_purged": bands_purged,
-        "set_leaves_purged": sets_purged,
-    }
+    """Return a torn-append index to its exact pre-append state."""
+    return storeproto.recover(SPEC, spark, path)
 
 
 def compact_dedup_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
-    """Per-leaf small-file compaction of BOTH partitioned relations
-    after many appends (each append writes one file set per touched
-    band/bucket). Hive layouts — and therefore the sets store's dynamic
-    pruning — are preserved; each leaf uses the compactor's crash-safe
-    swap protocol."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    return {
-        "bands": compact_partitioned_dir(
-            spark, os.path.join(path, "bands"), target_bytes=target_bytes
-        ),
-        "sets": compact_partitioned_dir(
-            spark, os.path.join(path, "sets"), target_bytes=target_bytes
-        ),
-    }
-
-
-def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
-    """The source fingerprint stamped into meta; None when the artifact
-    is absent or torn (pending append OR crashed-rebuild marker) —
-    every case a fingerprint-checking consumer must treat as
-    'rebuild'."""
-    if os.path.exists(os.path.join(path, _PENDING)) or os.path.exists(
-        os.path.join(path, _BUILD_PENDING)
-    ):
-        return None
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if not os.path.isdir(meta_dir):
-        return None
-    try:
-        row = spark.read.parquet(meta_dir).select("fingerprint").head()
-    except Exception:
-        return None
-    return row["fingerprint"] if row else None
+    """Per-leaf small-file compaction of both partitioned relations."""
+    return storeproto.compact(SPEC, spark, path, target_bytes)
 
 
 def query_dedup_index(
@@ -585,10 +326,10 @@ def query_dedup_index(
     landed, and a candidate without its verify set would be silently
     dropped; the error advises the safe fix (recover_dedup_index_append
     for an append, rebuild for a rebuild)."""
-    _check_markers(path)
+    storeproto.check_markers(SPEC, path)
     from ._cache import swap_cache
 
-    m = _read_meta(spark, path)
+    m = storeproto.read_meta(spark, path)
     mh = swap_cache(
         "dedup_index_query",
         minhash_sets_and_sigs(
@@ -685,14 +426,14 @@ def dedup_index_governance(
 
     from .dedup import MINHASH_MOD, minhash_perm_constants
 
-    _check_markers(path)
+    storeproto.check_markers(SPEC, path)
     ids = sorted(set(sample_ids))[:max_ids]
     if not ids:
         raise ValueError(
             "dedup_index_governance needs a non-empty id sample — "
             "a health check over zero ids would read as healthy"
         )
-    m = _read_meta(spark, path)
+    m = storeproto.read_meta(spark, path)
     id_col = id_col or m.asDict().get("id_col") or "doc_id"
     # cap: a healthy sample has 1 set row and n_bands band rows per id;
     # allow 4x before truncating the diagnostic (4 dup generations per

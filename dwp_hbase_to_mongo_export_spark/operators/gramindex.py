@@ -34,19 +34,13 @@ Artifact layout at ``path/``:
               distinct doc count must track it in the corpus table,
               not this sidecar.
 
-Crash-safety is the shared store protocol (textindex.py primitives):
-``_append-pending`` marker recording the pre-append meta scalars +
-``_pending-ids`` purge record written before any store write; marker
-removal is the commit record; ``_last-append`` batch-id sidecar makes
-retries of a committed batch an explicit no-op; all mutations hold the
-store's ``_append.lock`` flock; readers refuse marked artifacts.
+Crash-safety and exactly-once retries are the shared store protocol
+(operators/storeproto.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,24 +52,10 @@ from .spandedup import (
     _staged_grams,
     strip_covered,
 )
-from .textindex import (
-    _batched_leaf_purge,
-    _BUILD_PENDING,
-    _LAST_APPEND,
-    _PENDING,
-    _UNKNOWN,
-    _append_lock,
-    _clear_stale_ids_record,
-    _recover_swap,
-    _recovered_leaves,
-    _restore_last_append,
-    _swap_write,
-    _write_last_append,
-    read_last_append,
-)
+from . import storeproto
+from .storeproto import read_last_append, stored_fingerprint  # noqa: F401
 
 N_GRAM_BUCKETS = 64
-_PENDING_IDS = "_pending-ids"
 
 
 def gram_bucket(gh) -> F.Column:
@@ -83,20 +63,6 @@ def gram_bucket(gh) -> F.Column:
     int, pmod 64. A pure function of gh — equal grams always land in
     the same leaf."""
     return F.pmod(F.conv(F.substring(gh, 1, 4), 16, 10).cast("int"), F.lit(N_GRAM_BUCKETS))
-
-
-def _check_markers(path: str) -> None:
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — grams/meta may mix "
-            "two generations; rebuild the gram index from the corpus"
-        )
-    if os.path.exists(os.path.join(path, _PENDING)):
-        raise ValueError(
-            f"{path}: an append is pending or died mid-flight — gram "
-            "rows may already be stored; run recover_gram_index_append "
-            "and re-append the delta, or rebuild the index"
-        )
 
 
 def _gram_relation(
@@ -111,26 +77,19 @@ def _gram_relation(
     return g.withColumn("bucket", gram_bucket(F.col("gh")))
 
 
-def _write_meta(
+def _meta_frame(
     spark: SparkSession,
-    path: str,
     n_docs: int,
     n_grams: int,
     n: int,
     fingerprint: str,
-    first: bool,
     normalise: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
+) -> DataFrame:
+    return spark.createDataFrame(
         [(n_docs, n_grams, n, fingerprint, bool(normalise))],
         "n_docs bigint, n_grams bigint, n int, fingerprint string, "
         "normalise boolean",
     )
-    target = os.path.join(path, "meta")
-    if first:
-        meta.write.mode("overwrite").parquet(target)
-    else:
-        _swap_write(meta, target)
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -153,67 +112,101 @@ def build_gram_index(
     normalise: bool = False,
 ) -> None:
     """ONE corpus-scale tokenise/hash/distinct pass into the bucketed
-    gram store. First-build commit record is meta-written-last; an
-    in-place rebuild is bracketed by ``_build-pending`` (readers
-    refuse), and holds the mutation lock like every append.
+    gram store, inside the store protocol's build bracket.
 
     ``normalise=True`` stores NORMALISED gram hashes (lower +
     punctuation strip, spandedup._norm_word) — the policy is stamped
     into meta, and appends/probes read it from there, so a caller can
     never mix strict and normalised hashes in one store."""
-    os.makedirs(path, exist_ok=True)
-    with _append_lock(path):
-        _build_gram_index_locked(
-            corpus, path, text_col, id_col, n, fingerprint, normalise
+
+    def write() -> None:
+        spark = corpus.sparkSession
+        grams = _gram_relation(corpus, text_col, id_col, n, normalise)
+        grams.write.mode("overwrite").partitionBy("bucket").parquet(
+            os.path.join(path, "grams")
         )
+        n_grams = spark.read.parquet(os.path.join(path, "grams")).count()
+        n_docs = corpus.select(id_col).distinct().count()
+        _meta_frame(
+            spark, n_docs, n_grams, n, fingerprint or "", normalise
+        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+
+    storeproto.build(SPEC, path, fingerprint, write)
 
 
-def _build_gram_index_locked(
-    corpus: DataFrame,
+def _prepare_append(
+    spark: SparkSession,
     path: str,
-    text_col: str,
-    id_col: str,
-    n: int,
-    fingerprint: str | None,
-    normalise: bool = False,
-) -> None:
-    spark = corpus.sparkSession
-    rebuild = os.path.isdir(os.path.join(path, "meta")) or os.path.isdir(
-        os.path.join(path, "grams")
+    delta: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    fingerprint: str | None = None,
+) -> storeproto.Batch:
+    """The append hook for an ACCEPTED batch: delta-sized gram work, one
+    anti-join against the store (only genuinely new hashes are written,
+    so unlike the doc-keyed stores the delta may freely overlap the
+    corpus; the store stays distinct by construction), meta merged by
+    addition. Because overlap is allowed, the merged ``n_docs`` is "doc
+    ingests observed" (module docstring). The ids record IS the exact
+    to-insert gh set, and the rows are read back from it, so the purge
+    set provably equals the inserted set."""
+    old = storeproto.read_meta(spark, path)
+    n = int(old["n"])
+    normalise = _meta_normalise(old)
+    store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
+    new_ghs = (
+        _gram_relation(delta, text_col, id_col, n, normalise)
+        .join(store, "gh", "left_anti")
+        .select("gh", "bucket")
     )
-    build_marker = os.path.join(path, _BUILD_PENDING)
-    if rebuild:
-        with open(build_marker, "w", encoding="utf-8") as f:
-            f.write(fingerprint or "")
-    pending = os.path.join(path, _PENDING)
-    if os.path.exists(pending):
-        os.remove(pending)  # full rebuild supersedes any torn append
-    pids = os.path.join(path, _PENDING_IDS)
-    if os.path.isdir(pids):
-        shutil.rmtree(pids)
-    last = os.path.join(path, _LAST_APPEND)
-    if os.path.exists(last):
-        # batch ids committed against the OLD artifact must not no-op
-        # appends to the rebuilt one
-        os.remove(last)
-    grams = _gram_relation(corpus, text_col, id_col, n, normalise)
-    grams.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "grams")
+
+    def write_rows(to_insert: DataFrame) -> dict:
+        to_insert.write.mode("append").partitionBy("bucket").parquet(
+            os.path.join(path, "grams")
+        )
+        return {"grams_inserted": int(to_insert.count())}
+
+    def merge_meta(extras: dict) -> list:
+        n_batch_docs = delta.select(id_col).distinct().count()
+        meta = _meta_frame(
+            spark,
+            int(old["n_docs"]) + n_batch_docs,
+            int(old["n_grams"]) + extras["grams_inserted"],
+            n,
+            fingerprint or str(old["fingerprint"]),
+            normalise,
+        )
+        return [("meta", meta, None)]
+
+    return storeproto.Batch(
+        recorded=old.asDict(),
+        ids=new_ghs,
+        write_rows=write_rows,
+        merge_meta=merge_meta,
     )
-    n_grams = spark.read.parquet(os.path.join(path, "grams")).count()
-    n_docs = corpus.select(id_col).distinct().count()
-    _write_meta(
-        spark,
-        path,
-        n_docs,
-        n_grams,
-        n,
-        fingerprint or "",
-        first=True,
-        normalise=normalise,
+
+
+def _restore_meta(spark: SparkSession, path: str, old: dict) -> DataFrame:
+    return _meta_frame(
+        spark, old["n_docs"], old["n_grams"], old["n"], old["fingerprint"],
+        old["normalise"],
     )
-    if os.path.exists(build_marker):
-        os.remove(build_marker)
+
+
+SPEC = storeproto.StoreSpec(
+    name="gram",
+    relations=(storeproto.Relation("grams", "bucket=", key="gh", columns=("gh",)),),
+    recorded={
+        "n_docs": int,
+        "n_grams": int,
+        "n": int,
+        "normalise": bool,
+        "fingerprint": storeproto._fp,
+    },
+    prepare=_prepare_append,
+    ids_col="gh",
+    restore_meta=_restore_meta,
+)
 
 
 def append_to_gram_index(
@@ -224,179 +217,17 @@ def append_to_gram_index(
     fingerprint: str | None = None,
     batch_id: str | None = None,
 ) -> dict:
-    """Serialization shell; protocol on ``_append_to_gram_index_impl``."""
-    with _append_lock(path):
-        return _append_to_gram_index_impl(
-            delta, path, text_col, id_col, fingerprint, batch_id
-        )
-
-
-def _append_to_gram_index_impl(
-    delta: DataFrame,
-    path: str,
-    text_col: str,
-    id_col: str,
-    fingerprint: str | None,
-    batch_id: str | None,
-) -> dict:
-    """Add an ACCEPTED batch's grams: delta-sized gram work, one
-    anti-join against the store (only genuinely new hashes are
-    written — so unlike the doc-keyed stores the delta may freely
-    overlap the corpus; the store stays distinct by construction), new
-    rows appended into their static buckets, meta merged by addition.
-    Because overlap is allowed, the merged ``n_docs`` is "doc ingests
-    observed" — re-ingesting the same doc ids adds them again
-    (``n_grams`` stays exact; see the module docstring).
-
-    Crash/retry protocol (the shared store discipline): pre-append meta
-    scalars + the last-append slot go into the ``_append-pending``
-    marker and the exact to-insert gh set into ``_pending-ids`` (with
-    its _SUCCESS as the proof-of-record) BEFORE any store write; the
-    inserted rows are then READ BACK from the ids record so the purge
-    set provably equals the inserted set. Marker removal commits.
-    ``batch_id`` gives exactly-once under ingest retries
-    (textindex.read_last_append)."""
-    spark = delta.sparkSession
-    if os.path.exists(os.path.join(path, _BUILD_PENDING)):
-        raise ValueError(
-            f"{path}: a rebuild died mid-flight — rebuild the gram "
-            "index before appending"
-        )
-    _recover_gram_index_append_impl(spark, path)
-    if batch_id is not None and read_last_append(path) == batch_id:
-        return {"committed": False, "skipped_duplicate_batch": True}
-    if delta.isEmpty():
-        if batch_id is not None:
-            _write_last_append(path, batch_id)
-        return {"committed": True, "skipped_duplicate_batch": False}
-    _recover_swap(os.path.join(path, "meta"))
-    old = _read_meta(spark, path)
-    n = int(old["n"])
-    normalise = _meta_normalise(old)
-    store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
-    new_ghs = (
-        _gram_relation(delta, text_col, id_col, n, normalise)
-        .join(store, "gh", "left_anti")
-        .select("gh", "bucket")
+    """Add an accepted batch's grams (see ``_prepare_append``) under the
+    store protocol; ``batch_id`` makes a retried batch a no-op."""
+    return storeproto.append(
+        SPEC, delta, path, batch_id,
+        text_col=text_col, id_col=id_col, fingerprint=fingerprint,
     )
-    pending = os.path.join(path, _PENDING)
-    with open(pending, "w", encoding="utf-8") as f:
-        f.write(
-            json.dumps(
-                {
-                    "protocol": 2,
-                    "n_docs": int(old["n_docs"]),
-                    "n_grams": int(old["n_grams"]),
-                    "n": n,
-                    "normalise": normalise,
-                    "fingerprint": old["fingerprint"],
-                    "last_append": read_last_append(path),
-                }
-            )
-        )
-    pids = os.path.join(path, _PENDING_IDS)
-    new_ghs.write.mode("overwrite").parquet(pids)
-    # read the ids record back as the insert set: one evaluation, and
-    # the recorded purge set is exactly what lands in the store
-    to_insert = spark.read.parquet(pids)
-    to_insert.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(path, "grams")
-    )
-    n_inserted = to_insert.count()
-    n_batch_docs = delta.select(id_col).distinct().count()
-    _write_meta(
-        spark,
-        path,
-        int(old["n_docs"]) + n_batch_docs,
-        int(old["n_grams"]) + n_inserted,
-        n,
-        fingerprint or str(old["fingerprint"]),
-        first=False,
-        normalise=normalise,
-    )
-    if batch_id is not None:
-        _write_last_append(path, batch_id)
-    # commit point: marker removal precedes the ids-record delete (a
-    # marker-less stale ids dir is inert junk; the reverse order would
-    # let recovery restore meta under committed gram rows)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {
-        "committed": True,
-        "skipped_duplicate_batch": False,
-        "grams_inserted": int(n_inserted),
-    }
 
 
 def recover_gram_index_append(spark: SparkSession, path: str) -> dict:
-    """Locked standalone recovery (see _recover_gram_index_append_impl)."""
-    with _append_lock(path):
-        return _recover_gram_index_append_impl(spark, path)
-
-
-def _recover_gram_index_append_impl(spark: SparkSession, path: str) -> dict:
-    """Return a torn-append store to its exact pre-append state: purge
-    the recorded ``_pending-ids`` hashes from their bucket leaves
-    (equal to the inserted set by construction), restore the recorded
-    meta scalars and last-append slot. Protocol-2 marker without a
-    committed ids record proves the store is untouched (the record
-    precedes every store write); pre-v2 ambiguity raises."""
-    pending = os.path.join(path, _PENDING)
-    if not os.path.exists(pending):
-        return _clear_stale_ids_record(path, _PENDING_IDS)
-    with open(pending, encoding="utf-8") as f:
-        raw = f.read()
-    try:
-        state = json.loads(raw)
-        old = {
-            "n_docs": int(state["n_docs"]),
-            "n_grams": int(state["n_grams"]),
-            "n": int(state["n"]),
-            "normalise": bool(state.get("normalise", False)),
-            "fingerprint": str(state.get("fingerprint") or ""),
-        }
-        protocol = int(state.get("protocol") or 1)
-        old_last = state.get("last_append", _UNKNOWN)
-    except (ValueError, TypeError, KeyError) as e:
-        raise ValueError(
-            f"{path}: pending-append marker is unreadable ({e!r}) — "
-            "cannot be auto-recovered; rebuild the gram index"
-        ) from None
-    pids = os.path.join(path, _PENDING_IDS)
-    if not os.path.exists(os.path.join(pids, "_SUCCESS")):
-        if protocol < 2:
-            raise ValueError(
-                f"{path}: pending-append marker present but the "
-                "_pending-ids record is missing or incomplete — "
-                "ambiguous pre-protocol-2 state; rebuild the gram index"
-            )
-        if os.path.isdir(pids):
-            shutil.rmtree(pids)
-        _restore_last_append(path, old_last)
-        os.remove(pending)
-        return {"recovered": True, "leaves_purged": 0, "store_untouched": True}
-    purge = spark.read.parquet(pids).select("gh")
-    grams_dir = os.path.join(path, "grams")
-    # ONE batched job purges every bucket leaf (the
-    # textindex._batched_leaf_purge discipline — per-leaf jobs paid a
-    # scheduling round-trip per bucket)
-    leaves = _batched_leaf_purge(
-        spark, grams_dir, "bucket=", purge, "gh", columns=["gh"]
-    )
-    _write_meta(
-        spark,
-        path,
-        old["n_docs"],
-        old["n_grams"],
-        old["n"],
-        old["fingerprint"],
-        first=not os.path.isdir(os.path.join(path, "meta")),
-        normalise=old["normalise"],
-    )
-    _restore_last_append(path, old_last)
-    os.remove(pending)
-    shutil.rmtree(pids)
-    return {"recovered": True, "leaves_purged": len(leaves)}
+    """Return a torn-append store to its exact pre-append state."""
+    return storeproto.recover(SPEC, spark, path)
 
 
 def strip_spans_with_index(
@@ -422,7 +253,7 @@ def strip_spans_with_index(
     the gram set actually fits (the common case); above that it stays a
     shuffle semi-join on 16-byte hashes — the same AQE-decided
     discipline as the family's other joins."""
-    _check_markers(path)
+    storeproto.check_markers(SPEC, path)
     meta = _read_meta(spark, path)
     n = int(meta["n"])
     normalise = _meta_normalise(meta)
@@ -441,14 +272,8 @@ def strip_spans_with_index(
 def compact_gram_index(
     spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict:
-    """Per-bucket small-file compaction after many appends (each append
-    writes one file set per touched bucket); Hive layout preserved,
-    crash-safe per-leaf swap via the shared compactor."""
-    from ..sinks.compaction import compact_partitioned_dir
-
-    return compact_partitioned_dir(
-        spark, os.path.join(path, "grams"), target_bytes=target_bytes
-    )
+    """Per-bucket small-file compaction after many appends."""
+    return storeproto.compact(SPEC, spark, path, target_bytes)["grams"]
 
 
 def gram_index_governance(
@@ -464,9 +289,9 @@ def gram_index_governance(
     duplicate check for the sampled share of the hash space (no
     cross-leaf case exists to miss). Fragmentation (when to compact)
     mirrors the other stores' round-10 verdict."""
-    _check_markers(path)
+    storeproto.check_markers(SPEC, path)
     grams_dir = os.path.join(path, "grams")
-    leaves = _recovered_leaves(grams_dir, "bucket=")
+    leaves = storeproto._recovered_leaves(grams_dir, "bucket=")
     sampled = leaves[: max(1, sample_buckets)]
     dup_leaves = []
     n_rows = n_distinct = 0
@@ -496,20 +321,3 @@ def gram_index_governance(
         "fragmentation": frag,
         "compact": frag["compact"],
     }
-
-
-def stored_fingerprint(spark: SparkSession, path: str) -> str | None:
-    """Meta fingerprint, or None when absent/torn/unreadable — every
-    case a fingerprint-gated consumer treats as 'rebuild'."""
-    if os.path.exists(os.path.join(path, _PENDING)) or os.path.exists(
-        os.path.join(path, _BUILD_PENDING)
-    ):
-        return None
-    meta_dir = os.path.join(path, "meta")
-    _recover_swap(meta_dir)
-    if not os.path.isdir(meta_dir):
-        return None
-    try:
-        return str(_read_meta(spark, path)["fingerprint"])
-    except Exception:
-        return None

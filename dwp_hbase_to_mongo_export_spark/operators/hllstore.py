@@ -9,7 +9,7 @@ rows, and duplicated rows silently corrupt downstream answers. An HLL
 register relation composes by register-wise MAX, which is IDEMPOTENT:
 merging the same delta twice, or a torn half of it, yields the same
 registers as merging it once. So the entire durability story collapses
-to one primitive — write-to-staging + atomic swap (textindex's
+to one primitive — write-to-staging + atomic swap (storeproto's
 _swap_write, recover-on-entry) — and a retried append is simply safe.
 This module exists as much to DOCUMENT that contrast as to provide the
 store: choose merge algebras whose replays are no-ops and the
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sketches import HLL_M, HLL_W
-from .textindex import _append_lock, _recover_swap, _swap_write
+from .storeproto import _append_lock, _recover_swap, _swap_write
 
 _REGISTERS = "registers"
 _META = "meta.json"

@@ -2590,37 +2590,28 @@ def _cached_ivf_store(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _cached_pq_store(spark: SparkSession, sf_dir: str) -> str:
-    """A durable PQ codes store over the full embeddings table. The PQ
-    artifact has no meta relation, so the fingerprint commit record is
-    a sidecar file written AFTER a successful build (a crashed build
-    leaves no record and rebuilds). Codebooks are fit on an id-bounded
-    sample (constant work at every scale); the encode pass is the
-    corpus-sized build cost paid once per fingerprint."""
+    """A durable PQ codes store over the full embeddings table,
+    fingerprint-stamped via the store's meta relation (written last, so
+    a crashed build leaves no stamp and rebuilds). Codebooks are fit on
+    an id-bounded sample (constant work at every scale); the encode pass
+    is the corpus-sized build cost paid once per fingerprint."""
     import shutil as _shutil
 
     from .functions import indexcache
     from .functions.fingerprint import source_fingerprint
+    from .operators import storeproto
 
     fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     path = indexcache.user_cache_dir("spark_graft_pqstore_v1", sf_dir)
     with indexcache.build_lock(path):
-        fp_file = os.path.join(path, "_fingerprint")
-        stored = None
-        if os.path.exists(fp_file) and not os.path.exists(
-            os.path.join(path, "_append-pending")
-        ):
-            with open(fp_file, encoding="utf-8") as f:
-                stored = f.read()
-        if stored != fp:
+        if storeproto.stored_fingerprint(spark, path) != fp:
             _shutil.rmtree(path, ignore_errors=True)
             emb = load_table(spark, sf_dir, "embeddings")
             books = similarity.pq_train(
                 emb.filter(F.col("vec_id") < 5000), m=4, k_codes=8, iters=1
             )
             codes = similarity.pq_encode(emb, books)
-            similarity.save_pq_index(codes, books, path)
-            with open(fp_file, "w", encoding="utf-8") as f:
-                f.write(fp)
+            similarity.save_pq_index(codes, books, path, fingerprint=fp)
     return path
 
 
@@ -2633,9 +2624,10 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores (round-9 verdict #4: the recover_*_index_append machinery was
     correctness-tested but untimed, so a regression to corpus-sized
     recovery work had no tripwire). Per store: stage a fully-landed torn
-    append — protocol-2 marker + committed ids record + ALL of the
-    batch's store rows written, i.e. the maximal purge a recovery can
-    face — then run the recovery (purge + stats/meta restore) and report
+    append with the store protocol's own pre-commit step
+    (storeproto.stage_torn_append: marker + committed ids record + ALL
+    of the batch's store rows, i.e. the maximal purge a recovery can
+    face), then run the recovery (purge + stats/meta restore) and report
     its wall time.
 
     Cost contract this surface pins: staging is BATCH-sized CPU (the
@@ -2655,12 +2647,13 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store's build flock so concurrent indexed queries serialize
     against the mid-drill marker instead of mistaking it for a torn
     store."""
-    import json as _json
     import time as _time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from .functions import indexcache
-    from .operators import dedupindex, textindex
-    from .operators.textindex import read_last_append as _rla
+    from .operators import dedupindex, editindex, gramindex, storeproto, textindex
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2677,258 +2670,36 @@ def index_recovery_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 10 == 9) & (F.col("vec_id") < 3000)
     ).select((F.col("vec_id") + _OFF).alias("vec_id"), "embedding")
 
-    def _drill_text() -> tuple:
-        # all-bucket purge + per-bucket df recompute + meta restore
-        path = _cached_text_index(spark, sf_dir)
+    def _drill(spec, cached_store, delta) -> tuple:
+        path = cached_store(spark, sf_dir)
         with indexcache.build_lock(path):
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, textindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "n_tok_docs": int(m["n_tok_docs"]),
-                            "sum_dl": int(m["sum_dl"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            doc_delta.select("doc_id").distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, textindex._PENDING_DOCS))
-            postings, _, _ = textindex._index_relations(
-                doc_delta, "text", "doc_id"
-            )
-            postings.write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "postings")
-            )
+            storeproto.stage_torn_append(spec, delta, path)
             t0 = _time.time()
-            res = textindex.recover_text_index_append(spark, path)
+            res = storeproto.recover(spec, spark, path)
             return (
-                "text",
-                int(res["buckets_purged"]),
+                spec.name,
+                sum(res["leaves_purged"].values()),
                 round(_time.time() - t0, 3),
             )
 
-    def _drill_dedup() -> tuple:
-        # all-band purge + set-bucket purge + meta restore
-        path = _cached_dedup_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, dedupindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            doc_delta.select(F.col("doc_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, dedupindex._PENDING_IDS))
-            bands, sets = dedupindex._sig_relations(
-                doc_delta,
-                "text",
-                "doc_id",
-                m["n_perm"],
-                m["rows_per_band"],
-                m["k"],
-                m["max_chars"],
-            )
-            bands.write.mode("append").partitionBy("band").parquet(
-                os.path.join(path, "bands")
-            )
-            sets.write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "sets")
-            )
-            t0 = _time.time()
-            res = dedupindex.recover_dedup_index_append(spark, path)
-            return (
-                "dedup",
-                int(res["band_leaves_purged"]) + int(res["set_leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_ivf() -> tuple:
-        # purge prunes to the batch's recorded clusters
-        path = _cached_ivf_store(spark, sf_dir)
-        with indexcache.build_lock(path):
-            _, cents = similarity.load_ivf_index(spark, path)
-            batch_index = similarity._nearest_centroids(
-                vec_delta, cents, 1, "embedding", "cluster"
-            ).select(
-                "cluster",
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-            )
-            with open(os.path.join(path, similarity._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "kind": "ivf",
-                            "protocol": 2,
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            batch_index.select(
-                F.col("neighbor_id").alias("id"), "cluster"
-            ).distinct().write.mode("overwrite").parquet(
-                os.path.join(path, similarity._PENDING_IDS)
-            )
-            batch_index.write.mode("append").partitionBy("cluster").parquet(
-                os.path.join(path, "postings")
-            )
-            t0 = _time.time()
-            res = similarity.recover_ivf_index_append(spark, path)
-            return (
-                "ivf",
-                int(res["cluster_leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_pq() -> tuple:
-        # one anti-join rewrite of the flat codes store
-        path = _cached_pq_store(spark, sf_dir)
-        with indexcache.build_lock(path):
-            _, books = similarity.load_pq_index(spark, path)
-            with open(os.path.join(path, similarity._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "kind": "pq",
-                            "id_col": "vec_id",
-                            "protocol": 2,
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            vec_delta.select(F.col("vec_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, similarity._PENDING_IDS))
-            similarity.pq_encode(vec_delta, books).write.mode("append").parquet(
-                os.path.join(path, "codes")
-            )
-            t0 = _time.time()
-            res = similarity.recover_pq_index_append(spark, path)
-            return (
-                "pq",
-                int(bool(res["codes_purged"])),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_gram() -> tuple:
-        # all-leaf gh purge + meta restore on the span family's store
-        path = _cached_gram_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            from .operators import gramindex
-
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            store = spark.read.parquet(os.path.join(path, "grams")).select("gh")
-            new_ghs = (
-                gramindex._gram_relation(doc_delta, "text", "doc_id", int(m["n"]))
-                .join(store, "gh", "left_anti")
-            )
-            # stage the EXACT production marker shape, including the
-            # last_append slot a real protocol-2 append always records
-            # (round-11 advice — its absence read as the _UNKNOWN
-            # sentinel: benign, but the drill should drill reality)
-            with open(os.path.join(path, gramindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "n_grams": int(m["n_grams"]),
-                            "n": int(m["n"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            pids = os.path.join(path, gramindex._PENDING_IDS)
-            new_ghs.write.mode("overwrite").parquet(pids)
-            spark.read.parquet(pids).write.mode("append").partitionBy(
-                "bucket"
-            ).parquet(os.path.join(path, "grams"))
-            t0 = _time.time()
-            res = gramindex.recover_gram_index_append(spark, path)
-            return (
-                "gram",
-                int(res["leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
-    def _drill_edit() -> tuple:
-        # two-store id purge (prefix/ + docs/) + meta restore on the
-        # edit-distance family's frozen-order prefix store
-        path = _cached_edit_index(spark, sf_dir)
-        with indexcache.build_lock(path):
-            from .operators import editindex
-
-            m = spark.read.parquet(os.path.join(path, "meta")).head()
-            with open(os.path.join(path, editindex._PENDING), "w") as f:
-                f.write(
-                    _json.dumps(
-                        {
-                            "protocol": 2,
-                            "n_docs": int(m["n_docs"]),
-                            "k": int(m["k"]),
-                            "q": int(m["q"]),
-                            "fingerprint": m["fingerprint"],
-                            "last_append": _rla(path),
-                        }
-                    )
-                )
-            pids = os.path.join(path, editindex._PENDING_IDS)
-            doc_delta.select(F.col("doc_id").alias("id")).distinct().write.mode(
-                "overwrite"
-            ).parquet(pids)
-            frozen = spark.read.parquet(os.path.join(path, "df"))
-            emit, doc_rows = editindex._emit_rows(
-                doc_delta, frozen, int(m["k"]), int(m["q"])
-            )
-            emit.withColumn(
-                "gbucket", editindex._gbucket(F.col("g"))
-            ).write.mode("append").partitionBy("gbucket").parquet(
-                os.path.join(path, "prefix")
-            )
-            doc_rows.withColumn(
-                "bucket", editindex._dbucket(F.col("id"))
-            ).write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(path, "docs")
-            )
-            t0 = _time.time()
-            res = editindex.recover_edit_index_append(spark, path)
-            return (
-                "edit",
-                int(res["leaves_purged"]),
-                round(_time.time() - t0, 3),
-            )
-
+    drills = [
+        (textindex.SPEC, _cached_text_index, doc_delta),
+        (dedupindex.SPEC, _cached_dedup_index, doc_delta),
+        (similarity.IVF_SPEC, _cached_ivf_store, vec_delta),
+        (similarity.PQ_SPEC, _cached_pq_store, vec_delta),
+        (gramindex.SPEC, _cached_gram_index, doc_delta),
+        (editindex.SPEC, _cached_edit_index, doc_delta),
+    ]
     # The six stores are fully independent (own directories, own
     # locks), exactly like a production maintenance window over many
     # artifacts — run them concurrently so the drill's wall-time tracks
-    # the slowest store, not the sum of six.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(6) as ex:
-        rows = [
-            f.result()
-            for f in [
-                ex.submit(_drill_text),
-                ex.submit(_drill_dedup),
-                ex.submit(_drill_ivf),
-                ex.submit(_drill_pq),
-                ex.submit(_drill_gram),
-                ex.submit(_drill_edit),
-            ]
+    # the slowest store, not the sum of six. Spark local properties are
+    # thread-local: each pool task inherits the caller's job group.
+    with ThreadPoolExecutor(len(drills)) as ex:
+        futs = [
+            ex.submit(inheritable_thread_target(spark)(_drill), *d) for d in drills
         ]
+        rows = [f.result() for f in futs]
 
     return spark.createDataFrame(
         rows, "store string, leaves_purged bigint, recover_sec double"

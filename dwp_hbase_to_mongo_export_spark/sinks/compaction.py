@@ -167,8 +167,11 @@ def compact_partitioned_dir(
     # without driver-side job pileup. Crash-safety is unchanged — each
     # leaf's recover-then-swap protocol is leaf-local, and a failed/
     # partial run retries exactly like the sequential form (compacted
-    # leaves no-op on file count).
+    # leaves no-op on file count). Spark local properties are
+    # thread-local, so each task inherits the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     def _one(leaf: str) -> tuple[str, dict]:
         res = compact_parquet_dir(
@@ -180,7 +183,8 @@ def compact_partitioned_dir(
         return os.path.relpath(leaf, input_dir), res
 
     with ThreadPoolExecutor(min(8, len(leaves))) as ex:
-        results = list(ex.map(_one, leaves))
+        futs = [ex.submit(inheritable_thread_target(spark)(_one), leaf) for leaf in leaves]
+        results = [f.result() for f in futs]
     per = dict(results)
     n_compacted = sum(bool(r["compacted"]) for _, r in results)
     return {

@@ -508,8 +508,7 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def store_maintenance(
     spark: SparkSession,
     index_path: str,
-    data_dirs: list[str],
-    compactor,
+    spec,
     max_files_per_leaf: int = 8,
 ):
     """WHEN-compact decision wired to action (round-10 verdict #5):
@@ -517,25 +516,27 @@ def store_maintenance(
     (sinks/compaction.fragmentation_report) but nothing acted on it —
     an epoch-per-file ingest cadence walks a leaf from 2 files to
     2,000 and scan cost becomes file-open overhead. Returns a callable
-    for ``index_stream_ingest``'s ``maintenance`` hook that, under the
-    store's ``_append.lock`` (so it can never interleave with a live
-    append or recovery):
+    for the ingest loop's maintenance hook that, under the store's
+    mutation lock (so it can never interleave with a live append or
+    recovery):
 
-    1. runs the metadata-only fragmentation verdict over the store's
-       data directories (pure os.walk — no Spark job on the happy
-       path), and
-    2. invokes ``compactor()`` (the store's own crash-safe per-leaf
-       compactor) only when the verdict flags.
+    1. runs the metadata-only fragmentation verdict over the data
+       relations ``spec`` declares (pure os.walk — no Spark job on the
+       happy path), and
+    2. runs the store's crash-safe per-leaf compaction only when the
+       verdict flags.
 
     Cost shape: the check is filesystem-metadata-sized per epoch; the
     compaction, when it fires, rewrites only fragmented leaves through
     the swap protocol — leaf-sized I/O, amortised across the epochs
     that fragmented them."""
-    from ..operators.textindex import _append_lock
+    from ..operators import storeproto
     from ..sinks.compaction import fragmentation_report
 
+    data_dirs = [os.path.join(index_path, rel.dir) for rel in spec.relations]
+
     def maintain() -> dict:
-        with _append_lock(index_path):
+        with storeproto._append_lock(index_path):
             flagged = any(
                 fragmentation_report(
                     d, max_files_per_leaf=max_files_per_leaf
@@ -545,56 +546,25 @@ def store_maintenance(
             )
             if not flagged:
                 return {"compacted": False}
-            result = compactor()
+            result = storeproto.compact(spec, spark, index_path)
             return {"compacted": True, "result": result}
 
     return maintain
 
 
-def index_stream_ingest(
+def _ingest_epochs(
     spark: SparkSession,
     delta_dir: str,
     append,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
+    checkpoint_dir: str | None,
+    max_files_per_trigger: int,
+    timeout_sec: int,
     maintenance=None,
 ) -> dict:
-    """Micro-batch ingest of NEW rows into any of the durable
-    stores: readStream over the delta directory → ``foreachBatch``
-    calling ``append(batch_df, batch_id)`` with the EPOCH id as the
-    store's ``batch_id``. This composes Structured Streaming's recovery
-    model with the stores' idempotence record into exactly-once index
-    ingest: against a durable checkpoint Spark replays AT MOST the last
-    uncommitted epoch after a failure, the replayed ``foreachBatch``
-    call re-delivers the same rows under the same epoch id, and the
-    store's single-slot ``_last-append`` sidecar (which records exactly
-    the last committed batch — the only one a marker-bracketed store
-    can have in flight, and the only one Spark will replay) turns the
-    re-append into a no-op instead of a double-write. Reference parity:
-    the incremental export keyed by correlation id over HBase time
-    ranges (HBaseReader.kt:131-150, the snapshotSender correlation id)
-    — here the correlation id is the epoch.
-
-    ``append(batch_df, batch_id) -> {"skipped_duplicate_batch": bool}``
-    — any store's append partially applied, e.g.
-    ``lambda df, b: similarity.append_to_ivf_index(path, df, batch_id=b)``
-    (named wrappers below cover the text/dedup stores).
-
-    Pass a persistent ``checkpoint_dir`` to make restarts resume from
-    the offset log (a FRESH checkpoint replays every file — that is a
-    rebuild scenario, not a retry, and is deliberately not absorbed).
-
-    ``maintenance`` (see ``store_maintenance``) runs BETWEEN epochs,
-    after each committed append: foreachBatch calls are sequential, so
-    a flagged compaction executes in the natural maintenance window —
-    the stream simply triggers its next micro-batch afterwards, and
-    because compaction is content-preserving and runs under the store
-    lock, concurrent readers and the replay protocol are unaffected.
-
-    Returns {"epochs": n_foreachBatch_calls, "skipped":
-    n_replays_noopd, "compactions": n_maintenance_compactions}.
-    """
+    """readStream over ``delta_dir`` → ``foreachBatch`` calling
+    ``append(batch_df, "epoch-<id>") -> {"skipped_duplicate_batch":
+    bool}``, then ``maintenance()`` (when given) after each epoch.
+    Returns {"epochs", "skipped", "compactions"}."""
     import shutil as _shutil
 
     from ..sources.parquet import ensure_read_confs
@@ -635,248 +605,63 @@ def index_stream_ingest(
     return stats
 
 
-def dedup_index_stream_ingest(
+def index_stream_ingest(
     spark: SparkSession,
     delta_dir: str,
+    spec,
     index_path: str,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int = 1,
     timeout_sec: int = 120,
     auto_compact: bool = True,
     compact_max_files_per_leaf: int = 8,
+    **append_opts,
 ) -> dict:
-    """index_stream_ingest bound to the dedup signature index, with
-    between-epoch auto-compaction of BOTH partitioned relations when
-    the fragmentation verdict flags."""
-    from ..operators import dedupindex
+    """Micro-batch ingest of NEW rows into the durable store ``spec``
+    (operators/storeproto.py) at ``index_path``: readStream over the
+    delta directory → ``foreachBatch`` appending each micro-batch with
+    its EPOCH id as the store's ``batch_id`` (``append_opts`` go to the
+    store's append, e.g. ``id_col``). This composes Structured
+    Streaming's recovery model with the store's idempotence record into
+    exactly-once index ingest: against a durable checkpoint Spark
+    replays AT MOST the last uncommitted epoch after a failure, the
+    replayed call re-delivers the same rows under the same epoch id,
+    and the store's single-slot last-append record turns the re-append
+    into a no-op instead of a double-write. Reference parity: the
+    incremental export keyed by correlation id over HBase time ranges
+    (HBaseReader.kt:131-150) — here the correlation id is the epoch.
+
+    Pass a persistent ``checkpoint_dir`` to make restarts resume from
+    the offset log (a FRESH checkpoint replays every file — that is a
+    rebuild scenario, not a retry, and is deliberately not absorbed).
+
+    With ``auto_compact`` the ``store_maintenance`` hook runs BETWEEN
+    epochs, after each committed append: foreachBatch calls are
+    sequential, so a flagged compaction executes in the natural
+    maintenance window, and because compaction is content-preserving
+    and runs under the store lock, concurrent readers and the replay
+    protocol are unaffected.
+
+    Returns {"epochs": n_foreachBatch_calls, "skipped":
+    n_replays_noopd, "compactions": n_maintenance_compactions}.
+    """
+    from ..operators import storeproto
 
     maintenance = (
         store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "bands"), os.path.join(index_path, "sets")],
-            lambda: dedupindex.compact_dedup_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
+            spark, index_path, spec, max_files_per_leaf=compact_max_files_per_leaf
         )
         if auto_compact
         else None
     )
-    return index_stream_ingest(
+    return _ingest_epochs(
         spark,
         delta_dir,
-        lambda df, b: dedupindex.append_to_dedup_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
-    )
-
-
-def text_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
-) -> dict:
-    """index_stream_ingest bound to the BM25 text index, with
-    between-epoch auto-compaction of the posting store when the
-    fragmentation verdict flags (stats/meta are swap-rewritten
-    wholesale per append and never fragment)."""
-    from ..operators import textindex
-
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "postings")],
-            lambda: textindex.compact_text_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: textindex.append_to_text_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
-    )
-
-
-def ivf_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
-) -> dict:
-    """index_stream_ingest bound to the durable IVF posting store, with
-    between-epoch auto-compaction of the cluster leaves when the
-    fragmentation verdict flags (each append writes one file set per
-    touched cluster — exactly the micro-batch cadence that fragments)."""
-    from ..operators import similarity
-
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "postings")],
-            lambda: similarity.compact_ivf_postings(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: similarity.append_to_ivf_index(
-            index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
-    )
-
-
-def pq_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
-) -> dict:
-    """index_stream_ingest bound to the durable PQ codes store, with
-    between-epoch auto-compaction of the flat codes directory (treated
-    as a single leaf by the fragmentation verdict — every ADC query
-    scores every code row, so file-open overhead is pure waste)."""
-    from ..operators import similarity
-
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "codes")],
-            lambda: similarity.compact_pq_codes(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: similarity.append_to_pq_index(
-            index_path, df, id_col=id_col, vec_col=vec_col, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
-    )
-
-
-def gram_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
-) -> dict:
-    """index_stream_ingest bound to the duplicated-span gram index,
-    with between-epoch auto-compaction of the gram store when the
-    fragmentation verdict flags."""
-    from ..operators import gramindex
-
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [os.path.join(index_path, "grams")],
-            lambda: gramindex.compact_gram_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: gramindex.append_to_gram_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
-    )
-
-
-def edit_index_stream_ingest(
-    spark: SparkSession,
-    delta_dir: str,
-    index_path: str,
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-    auto_compact: bool = True,
-    compact_max_files_per_leaf: int = 8,
-) -> dict:
-    """index_stream_ingest bound to the edit-distance prefix store
-    (operators/editindex.py), with between-epoch auto-compaction of
-    BOTH its partitioned dirs (prefix/ and docs/) when the
-    fragmentation verdict flags."""
-    from ..operators import editindex
-
-    maintenance = (
-        store_maintenance(
-            spark,
-            index_path,
-            [
-                os.path.join(index_path, "prefix"),
-                os.path.join(index_path, "docs"),
-            ],
-            lambda: editindex.compact_edit_index(spark, index_path),
-            max_files_per_leaf=compact_max_files_per_leaf,
-        )
-        if auto_compact
-        else None
-    )
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        lambda df, b: editindex.append_to_edit_index(
-            df, index_path, batch_id=b
-        ),
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
-        maintenance=maintenance,
+        lambda df, b: storeproto.append(spec, df, index_path, b, **append_opts),
+        checkpoint_dir,
+        max_files_per_trigger,
+        timeout_sec,
+        maintenance,
     )
 
 
@@ -889,9 +674,9 @@ def hll_store_stream_ingest(
     max_files_per_trigger: int = 1,
     timeout_sec: int = 120,
 ) -> dict:
-    """index_stream_ingest bound to the durable HLL register store
+    """The epoch ingest loop bound to the durable HLL register store
     (operators/hllstore.py): each micro-batch's rows fold to their
-    register relation and MAX-merge into the store. Unlike the five
+    register relation and MAX-merge into the store. Unlike the six
     row stores, exactly-once here comes from ALGEBRA, not bookkeeping —
     a replayed epoch re-appends the same registers and max-merge makes
     that a no-op by value, so no batch-id sidecar participates and the
@@ -908,11 +693,6 @@ def hll_store_stream_ingest(
         )
         return {"skipped_duplicate_batch": False}
 
-    return index_stream_ingest(
-        spark,
-        delta_dir,
-        _append,
-        checkpoint_dir=checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_sec=timeout_sec,
+    return _ingest_epochs(
+        spark, delta_dir, _append, checkpoint_dir, max_files_per_trigger, timeout_sec
     )

@@ -105,6 +105,28 @@ def test_readme_driver_contract_counts_match_registry():
     assert m and words.index(m[1].lower()) == len(catalog.BENCH_ONLY)
 
 
+def test_store_protocol_files_are_named_in_one_module():
+    """One durable-store protocol: only operators/storeproto.py may know
+    the protocol's on-disk names, so no store can hand-write a marker,
+    ids record or last-append sidecar of its own."""
+    from pathlib import Path
+
+    pkg = Path(catalog.__file__).resolve().parent
+    names = (
+        "_append-pending",
+        "_build-pending",
+        "_last-append",
+        "_pending-ids",
+        "_pending-docs",
+    )
+    holders = {
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if any(n in f.read_text(encoding="utf-8") for n in names)
+    }
+    assert holders == {"operators/storeproto.py"}
+
+
 def test_driver_window_is_valid():
     assert len(catalog.DRIVER_WINDOW) == len(set(catalog.DRIVER_WINDOW))
     unknown = [n for n in catalog.DRIVER_WINDOW if n not in catalog.QUERIES]

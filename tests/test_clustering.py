@@ -7,7 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import clustering, dedup, similarity
+from dwp_hbase_to_mongo_export_spark.operators import (
+    clustering,
+    dedup,
+    similarity,
+    storeproto,
+)
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -823,12 +828,12 @@ def test_ivf_torn_append_recovers_and_retries(spark, emb, tmp_path):
     ).select(
         "cluster", F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
-    with open(_os.path.join(path, similarity._PENDING), "w") as f:
+    with open(_os.path.join(path, storeproto._PENDING), "w") as f:
         f.write(_json.dumps({"kind": "ivf"}))
     batch_index.select(
         F.col("neighbor_id").alias("id"), "cluster"
     ).distinct().write.mode("overwrite").parquet(
-        _os.path.join(path, similarity._PENDING_IDS)
+        _os.path.join(path, storeproto._PENDING_IDS)
     )
     batch_index.write.mode("append").partitionBy("cluster").parquet(
         path + "/postings"
@@ -837,7 +842,7 @@ def test_ivf_torn_append_recovers_and_retries(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="recover_ivf_index_append"):
         similarity.load_ivf_index(spark, path)
     res = similarity.recover_ivf_index_append(spark, path)
-    assert res["recovered"] and res["cluster_leaves_purged"] > 0
+    assert res["recovered"] and res["leaves_purged"]["postings"] > 0
     assert _ivf_postings_set(spark, path) == pre
 
     # the real append (which auto-recovers on entry too) now lands once
@@ -884,17 +889,17 @@ def test_pq_torn_append_recovers_and_retries(spark, emb, tmp_path):
         for r in spark.read.parquet(path + "/codes").collect()
     }
 
-    with open(_os.path.join(path, similarity._PENDING), "w") as f:
+    with open(_os.path.join(path, storeproto._PENDING), "w") as f:
         f.write(_json.dumps({"kind": "pq", "id_col": "vec_id"}))
     new.select(F.col("vec_id").alias("id")).distinct().write.mode(
         "overwrite"
-    ).parquet(_os.path.join(path, similarity._PENDING_IDS))
+    ).parquet(_os.path.join(path, storeproto._PENDING_IDS))
     similarity.pq_encode(new, books).write.mode("append").parquet(path + "/codes")
 
     with pytest.raises(ValueError, match="recover_pq_index_append"):
         similarity.load_pq_index(spark, path)
     res = similarity.recover_pq_index_append(spark, path)
-    assert res["recovered"] and res["codes_purged"]
+    assert res["recovered"] and res["leaves_purged"]["codes"] == 1
     assert {
         (r["vec_id"], tuple(r["codes"]))
         for r in spark.read.parquet(path + "/codes").collect()

@@ -6,7 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dwp_hbase_to_mongo_export_spark.operators import dedup, multimodal, similarity, textops
+from dwp_hbase_to_mongo_export_spark.operators import (
+    dedup,
+    multimodal,
+    similarity,
+    storeproto,
+    textops,
+)
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
 
 
@@ -501,25 +507,25 @@ def test_text_index_torn_append_recovers_and_retries(
     }
     pre_meta = tuple(spark.read.parquet(path + "/meta").head())
 
-    real_swap = textindex._swap_write
+    real_swap = storeproto._swap_write
 
     def boom(df, target, partition_by=None):
         if target.rstrip("/").endswith(crash_at):
             raise RuntimeError(f"simulated crash at the {crash_at} swap")
         real_swap(df, target, partition_by)
 
-    monkeypatch.setattr(textindex, "_swap_write", boom)
+    monkeypatch.setattr(storeproto, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         textindex.append_to_text_index(delta, path)
-    monkeypatch.setattr(textindex, "_swap_write", real_swap)
+    monkeypatch.setattr(storeproto, "_swap_write", real_swap)
 
-    assert _os.path.exists(_os.path.join(path, textindex._PENDING))
+    assert _os.path.exists(_os.path.join(path, storeproto._PENDING))
     with pytest.raises(ValueError, match="recover_text_index_append"):
         textindex.query_text_index(spark, path, terms)
     assert textindex.stored_fingerprint(spark, path) is None
 
     res = textindex.recover_text_index_append(spark, path)
-    assert res["recovered"] and res["buckets_purged"] > 0
+    assert res["recovered"] and res["leaves_purged"]["postings"] > 0
     # pre-append state restored EXACTLY: results, stats, meta, fingerprint
     got = textindex.query_text_index(spark, path, terms, top_n=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in pre]
@@ -571,7 +577,7 @@ def test_text_index_crashed_inplace_rebuild_leaves_marker(
         )
     monkeypatch.undo()
 
-    assert _os.path.exists(_os.path.join(path, textindex._BUILD_PENDING))
+    assert _os.path.exists(_os.path.join(path, storeproto._BUILD_PENDING))
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
         textindex.query_text_index(spark, path, ["table"])
     with pytest.raises(ValueError, match="rebuild died mid-flight"):
@@ -583,7 +589,7 @@ def test_text_index_crashed_inplace_rebuild_leaves_marker(
     textindex.build_text_index(
         docs.filter(F.col("doc_id") < 50), path, fingerprint="v2"
     )
-    assert not _os.path.exists(_os.path.join(path, textindex._BUILD_PENDING))
+    assert not _os.path.exists(_os.path.join(path, storeproto._BUILD_PENDING))
     assert textindex.stored_fingerprint(spark, path) == "v2"
     assert textindex.text_index_governance(spark, path, ["table"])["healthy"]
 
@@ -610,7 +616,7 @@ def test_text_index_partial_postings_append_recovery(spark, sf_dir, tmp_path):
     # hand-roll the crashed append's first three steps: marker (with
     # the recorded pre-append scalars), pending-docs, HALF the postings
     m = spark.read.parquet(path + "/meta").head()
-    with open(_os.path.join(path, textindex._PENDING), "w") as f:
+    with open(_os.path.join(path, storeproto._PENDING), "w") as f:
         f.write(
             _json.dumps(
                 {
@@ -622,7 +628,7 @@ def test_text_index_partial_postings_append_recovery(spark, sf_dir, tmp_path):
             )
         )
     delta.select(F.col("doc_id")).distinct().write.mode("overwrite").parquet(
-        _os.path.join(path, textindex._PENDING_DOCS)
+        _os.path.join(path, storeproto._PENDING_DOCS)
     )
     postings, _, _ = textindex._index_relations(delta, "text", "doc_id")
     postings.filter(F.col("doc_id") % 2 == 0).write.mode("append").partitionBy(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from dwp_hbase_to_mongo_export_spark.operators import (
     dedupindex,
     similarity,
+    storeproto,
     textindex,
 )
 from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
@@ -175,11 +176,11 @@ def test_crash_before_sidecar_retry_commits(spark, docs, tmp_path, monkeypatch):
     def boom(p, bid):
         raise RuntimeError("crash before sidecar")
 
-    monkeypatch.setattr(dedupindex, "_write_last_append", boom)
+    monkeypatch.setattr(storeproto, "_write_last_append", boom)
     with pytest.raises(RuntimeError, match="before sidecar"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
-    assert os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert os.path.exists(os.path.join(path, storeproto._PENDING))
     res = dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     assert res == {"committed": True, "skipped_duplicate_batch": False}
     full = _clean_equivalent(spark, docs, tmp_path)
@@ -195,18 +196,18 @@ def test_crash_after_sidecar_recovery_unstamps_it(
     otherwise the legitimate retry would read 'already committed', skip,
     and silently LOSE the batch."""
     path, delta = _fresh(docs, tmp_path, "ix")
-    real = dedupindex._write_last_append
+    real = storeproto._write_last_append
 
     def write_then_boom(p, bid):
         real(p, bid)
         raise RuntimeError("crash after sidecar")
 
-    monkeypatch.setattr(dedupindex, "_write_last_append", write_then_boom)
+    monkeypatch.setattr(storeproto, "_write_last_append", write_then_boom)
     with pytest.raises(RuntimeError, match="after sidecar"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
     # torn: marker present, sidecar (wrongly, transiently) stamped
-    assert os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert os.path.exists(os.path.join(path, storeproto._PENDING))
     assert dedupindex.read_last_append(path) == "b1"
     res = dedupindex.recover_dedup_index_append(spark, path)
     assert res["recovered"]
@@ -227,15 +228,15 @@ def test_crash_after_commit_retry_skips(spark, docs, tmp_path, monkeypatch):
     real = shutil.rmtree
 
     def boom(p, *a, **k):
-        if str(p).endswith(dedupindex._PENDING_IDS):
+        if str(p).endswith(storeproto._PENDING_IDS):
             raise RuntimeError("crash after commit")
         return real(p, *a, **k)
 
-    monkeypatch.setattr(dedupindex.shutil, "rmtree", boom)
+    monkeypatch.setattr(storeproto.shutil, "rmtree", boom)
     with pytest.raises(RuntimeError, match="after commit"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
-    assert not os.path.exists(os.path.join(path, dedupindex._PENDING))
+    assert not os.path.exists(os.path.join(path, storeproto._PENDING))
     res = dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     assert res == {"committed": False, "skipped_duplicate_batch": True}
     full = _clean_equivalent(spark, docs, tmp_path)
@@ -254,7 +255,7 @@ def test_crash_mid_store_write_retry_commits_once(
     def boom(df, target, partition_by=None):
         raise RuntimeError("crash at meta swap")
 
-    monkeypatch.setattr(dedupindex, "_swap_write", boom)
+    monkeypatch.setattr(storeproto, "_swap_write", boom)
     with pytest.raises(RuntimeError, match="meta swap"):
         dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     monkeypatch.undo()
@@ -272,7 +273,7 @@ def test_pre_batchid_marker_leaves_sidecar_alone(spark, docs, tmp_path):
     path, delta = _fresh(docs, tmp_path, "ix")
     dedupindex.append_to_dedup_index(delta, path, batch_id="b1")
     m = spark.read.parquet(path + "/meta").head()
-    with open(os.path.join(path, dedupindex._PENDING), "w") as f:
+    with open(os.path.join(path, storeproto._PENDING), "w") as f:
         f.write(
             json.dumps(
                 {
@@ -299,7 +300,7 @@ def test_streaming_epoch_keyed_ingest_exactly_once(spark, docs, tmp_path):
     checkpoint) no-ops; a restart on the SAME checkpoint re-delivers
     nothing."""
     from dwp_hbase_to_mongo_export_spark.streaming.incremental import (
-        dedup_index_stream_ingest,
+        index_stream_ingest,
     )
 
     corpus = docs.filter(F.col("doc_id") < 300)
@@ -310,7 +311,9 @@ def test_streaming_epoch_keyed_ingest_exactly_once(spark, docs, tmp_path):
     delta.repartition(3).write.parquet(delta_dir)
     ckpt = str(tmp_path / "ckpt")
 
-    stats = dedup_index_stream_ingest(spark, delta_dir, path, checkpoint_dir=ckpt)
+    stats = index_stream_ingest(
+        spark, delta_dir, dedupindex.SPEC, path, checkpoint_dir=ckpt
+    )
     assert stats["epochs"] >= 3 and stats["skipped"] == 0
 
     full = str(tmp_path / "full")
@@ -334,7 +337,9 @@ def test_streaming_epoch_keyed_ingest_exactly_once(spark, docs, tmp_path):
 
     # restart on the durable checkpoint: offsets are committed, so the
     # drain re-delivers nothing at all
-    stats = dedup_index_stream_ingest(spark, delta_dir, path, checkpoint_dir=ckpt)
+    stats = index_stream_ingest(
+        spark, delta_dir, dedupindex.SPEC, path, checkpoint_dir=ckpt
+    )
     assert stats["epochs"] == 0 or stats["skipped"] == stats["epochs"]
     assert _bands(spark, path) == _bands(spark, full)
 
@@ -384,7 +389,7 @@ def test_streaming_text_ingest_matches_batch_build(spark, docs, tmp_path):
     appends exactly once per epoch and the final index answers queries
     identically to a one-shot build over corpus ∪ delta."""
     from dwp_hbase_to_mongo_export_spark.streaming.incremental import (
-        text_index_stream_ingest,
+        index_stream_ingest,
     )
 
     corpus = docs.filter(F.col("doc_id") < 300)
@@ -394,7 +399,7 @@ def test_streaming_text_ingest_matches_batch_build(spark, docs, tmp_path):
     delta_dir = str(tmp_path / "delta")
     delta.select("doc_id", "text").repartition(3).write.parquet(delta_dir)
 
-    stats = text_index_stream_ingest(spark, delta_dir, path)
+    stats = index_stream_ingest(spark, delta_dir, textindex.SPEC, path)
     assert stats["epochs"] >= 3 and stats["skipped"] == 0
     assert textindex.read_last_append(path).startswith("epoch-")
 
@@ -415,7 +420,7 @@ def test_ivf_stream_ingest_exactly_once_with_auto_compaction(
     hook compacts when the tight leaf threshold flags, and the final
     postings are id-identical to a single batch append."""
     from dwp_hbase_to_mongo_export_spark.streaming.incremental import (
-        ivf_index_stream_ingest,
+        index_stream_ingest,
     )
 
     cents = similarity._resolve_centroids(
@@ -435,9 +440,10 @@ def test_ivf_stream_ingest_exactly_once_with_auto_compaction(
     delta.repartition(6).write.parquet(delta_dir)
     ckpt = str(tmp_path / "ckpt")
 
-    stats = ivf_index_stream_ingest(
+    stats = index_stream_ingest(
         spark,
         delta_dir,
+        similarity.IVF_SPEC,
         path,
         checkpoint_dir=ckpt,
         compact_max_files_per_leaf=2,
@@ -448,8 +454,8 @@ def test_ivf_stream_ingest_exactly_once_with_auto_compaction(
     assert got.count() == emb.count()
     assert got.select("neighbor_id").distinct().count() == emb.count()
     # restart on the durable checkpoint re-delivers nothing
-    stats = ivf_index_stream_ingest(
-        spark, delta_dir, path, checkpoint_dir=ckpt
+    stats = index_stream_ingest(
+        spark, delta_dir, similarity.IVF_SPEC, path, checkpoint_dir=ckpt
     )
     assert stats["epochs"] == 0 or stats["skipped"] == stats["epochs"]
     assert spark.read.parquet(path + "/postings").count() == emb.count()
@@ -462,7 +468,7 @@ def test_pq_stream_ingest_exactly_once_with_auto_compaction(
     is one leaf, so an epoch-per-file cadence trips the verdict fast;
     codes stay exactly-once and ADC-servable throughout."""
     from dwp_hbase_to_mongo_export_spark.streaming.incremental import (
-        pq_index_stream_ingest,
+        index_stream_ingest,
     )
 
     codes, books = similarity.build_pq_index(
@@ -474,9 +480,10 @@ def test_pq_stream_ingest_exactly_once_with_auto_compaction(
     delta_dir = str(tmp_path / "delta")
     delta.repartition(6).write.parquet(delta_dir)
 
-    stats = pq_index_stream_ingest(
+    stats = index_stream_ingest(
         spark,
         delta_dir,
+        similarity.PQ_SPEC,
         path,
         checkpoint_dir=str(tmp_path / "ckpt"),
         compact_max_files_per_leaf=2,

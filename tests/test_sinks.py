@@ -816,6 +816,36 @@ def test_partitioned_compaction_preserves_layout_and_pruning(spark, sf_dir, tmp_
     assert spark.read.parquet(d).count() == ev.count()
 
 
+def test_partitioned_compaction_jobs_stay_in_callers_job_group(
+    spark, sf_dir, tmp_path
+):
+    """Spark local properties are thread-local: the per-leaf pool must
+    carry the caller's job group into its threads, or every leaf
+    rewrite is an unattributed job in a per-query ledger."""
+    from dwp_hbase_to_mongo_export_spark.sinks.compaction import (
+        compact_partitioned_dir,
+    )
+    from dwp_hbase_to_mongo_export_spark.sources.parquet import load_table
+
+    d = str(tmp_path / "events_by_type")
+    load_table(spark, sf_dir, "events").repartition(4).write.partitionBy(
+        "event_type"
+    ).parquet(d)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("compaction-attribution", "compaction job-group pin")
+    try:
+        before = set(tracker.getJobIdsForGroup(None))
+        res = compact_partitioned_dir(spark, d, target_bytes=10**9)
+        unattributed = set(tracker.getJobIdsForGroup(None)) - before
+        grouped = tracker.getJobIdsForGroup("compaction-attribution")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert res["n_partitions"] >= 2 and res["n_compacted"] >= 2
+    assert grouped
+    assert unattributed == set()
+
+
 def test_streaming_export_then_compaction_e2e(spark, sf_dir, tmp_path):
     """The composition that motivates compaction: the streaming export
     pipeline's file sink accumulates one parquet file per micro-batch
